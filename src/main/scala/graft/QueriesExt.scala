@@ -2855,10 +2855,13 @@ object QueriesExt {
         "4_decontaminated" -> r34.getLong(1),
         "5_sampled" -> r56.getLong(0),
         "6_chunks" -> r56.getLong(1))
-    } finally pool.shutdown()
-    // the counts above were the caches' last readers — release them or
-    // they squat executor storage memory for the rest of the process
-    Seq(kept1, kept2, kept3).foreach(_.unpersist())
+    } finally {
+      pool.shutdown()
+      // the counts above were the caches' last readers — release them, on
+      // a failed count too, or they squat executor storage memory for the
+      // rest of the process
+      Seq(kept1, kept2, kept3).foreach(_.unpersist())
+    }
     counts
       .toDF("stage", "n")
       .orderBy("stage")

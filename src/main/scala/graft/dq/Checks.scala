@@ -14,65 +14,98 @@ final case class DqResult(
     status: String,
     details: String)
 
+/** A foreign key of a checked table: every `fk` value must match a `pk`
+  * value of `parent`.
+  */
+final case class ForeignKey(fk: String, parent: DataFrame, pk: String)
+
+/** What to check on one table: null and duplicate rate of `key`, orphan
+  * rate of `ref`. Either may be absent.
+  */
+final case class TableChecks(
+    df: DataFrame,
+    key: Option[String] = None,
+    ref: Option[ForeignKey] = None)
+
+/** The counts behind one table's rates: `n` rows; `nulls` and `uniq`
+  * (distinct non-null values) of the checked key; `orphans`, the rows whose
+  * FK is null or has no parent key. Counts of an absent check are 0.
+  */
+final case class KeyCounts(n: Long, nulls: Long, uniq: Long, orphans: Long) {
+  def nullRate: Double = rate(nulls)
+
+  /** The reference formula (pipeline.py:214-216) is
+    * (count - select(key).distinct().count()) / count, and DataFrame
+    * distinct() counts NULL as ONE distinct value, unlike COUNT(DISTINCT),
+    * which `uniq` comes from: the null group is added back when present.
+    */
+  def dupRate: Double = rate(n - uniq - (if (nulls > 0L) 1L else 0L))
+
+  def orphanRate: Double = rate(orphans)
+
+  /** An empty table has rate 0.0. */
+  private def rate(k: Long): Double = if (n == 0L) 0.0 else k.toDouble / n
+}
+
 /** Threshold-based data-quality checks (reference D2-D4,
   * `/root/reference/src/pipeline.py:189-253`; thresholds
   * `submission_Amadeu/metadata.json:17-21`).
   *
   * Design difference vs the reference (SURVEY.md §7.3): the reference runs 6+
-  * separate `count()` jobs and computes rates in driver Python; here each
-  * table's checks collapse into ONE aggregation job
-  * (`agg(sum(when(...)), count_distinct(...), count(*))`) — a single scan and
-  * a partial-aggregate shuffle of one row per partition, which is the shape
-  * that survives 100 TB. Orphan rate still needs its own anti-join pass, but
-  * the anti-join is key-only (column-pruned) and broadcastable when the parent
-  * key set is small.
+  * separate `count()` jobs and computes rates in driver Python; here every
+  * checked table becomes ONE lazy one-row aggregate
+  * (`count(*)`, null count and `count_distinct` of its key, unmatched FKs),
+  * and [[counts]] collects the aggregates of all tables in ONE action, so
+  * their stages are submitted together. Orphans come from a left join of the
+  * key-only (column-pruned) child to the parent's distinct keys, broadcast
+  * since a parent key set is a dimension-sized frame; the keys are distinct,
+  * so the join never repeats a child row and the same aggregate counts `n`.
   */
 object Checks {
 
+  /** The counts of every table in `tables`, in order, from one action. */
+  def counts(tables: Seq[TableChecks]): Seq[KeyCounts] = {
+    val rows = tables.zipWithIndex
+      .map { case (t, i) => aggregate(t).withColumn("__t", lit(i)) }
+      .reduce(_ unionByName _)
+      .collect() // one row per table
+      .map(r => r.getInt(4) -> KeyCounts(r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getLong(3)))
+      .toMap
+    tables.indices.map(rows)
+  }
+
+  /** One table's lazy one-row aggregate: n, nulls, uniq, orphans. */
+  private def aggregate(t: TableChecks): DataFrame = {
+    val joined = t.ref.fold(t.df) { r =>
+      val keys = r.parent.select(col(r.pk).as("__pk")).distinct()
+        .withColumn("__hit", lit(true))
+      t.df.join(broadcast(keys), col(r.fk) === col("__pk"), "left")
+    }
+    val zero = lit(0L)
+    joined.agg(
+      count(lit(1)).as("n"),
+      t.key.fold(zero)(k => count(when(col(k).isNull, lit(1)))).as("nulls"),
+      t.key.fold(zero)(k => countDistinct(col(k))).as("uniq"),
+      t.ref.fold(zero)(_ => count(when(col("__hit").isNull, lit(1))))
+        .as("orphans"))
+  }
+
   /** Null rate + duplicate rate of `key` in one pass. */
   def keyRates(df: DataFrame, key: String): (Double, Double) = {
-    val row = df
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col(key).isNull, 1L).otherwise(0L)).as("nulls"),
-        countDistinct(col(key)).as("uniq"))
-      .head()
-    val n = row.getAs[Long]("n")
-    if (n == 0L) (0.0, 0.0)
-    else {
-      val nulls = Option(row.getAs[Long]("nulls")).getOrElse(0L)
-      val uniq = row.getAs[Long]("uniq")
-      // reference formula (pipeline.py:214-216) is
-      // (count - select(key).distinct().count()) / count, and DataFrame
-      // distinct() counts NULL as ONE distinct value — unlike the
-      // COUNT(DISTINCT) aggregate, which excludes nulls entirely. countDistinct
-      // here excludes nulls, so add the null group back when present.
-      val uniqWithNull = uniq + (if (nulls > 0L) 1L else 0L)
-      (nulls.toDouble / n, (n - uniqWithNull).toDouble / n)
-    }
+    val c = counts(Seq(TableChecks(df, key = Some(key)))).head
+    (c.nullRate, c.dupRate)
   }
-
-  def nullRate(df: DataFrame, column: String): Double = keyRates(df, column)._1
-
-  def dupRate(df: DataFrame, key: String): Double = keyRates(df, key)._2
 
   /** Fraction of child rows whose FK has no match in the parent PK set
-    * (anti-join formulation, reference `pipeline.py:227-246`). Null FKs count
-    * as orphans only if `countNullFk` (the reference's anti-join does NOT
-    * match nulls, so they surface as orphans there; we keep that default).
+    * (anti-join semantics, reference `pipeline.py:227-246`): the
+    * reference's anti-join does not match nulls, so a null FK is an orphan
+    * as well as a dangling one.
     */
-  def orphanRate(child: DataFrame, fk: String, parent: DataFrame, pk: String,
-      broadcastParent: Boolean = true): Double = {
-    val total = child.count()
-    if (total == 0L) return 0.0
-    val keys0 = parent.select(col(pk).as("__pk")).distinct()
-    val keys = if (broadcastParent) broadcast(keys0) else keys0
-    val orphans = child
-      .select(col(fk))
-      .join(keys, col(fk) === col("__pk"), "left_anti")
-      .count()
-    orphans.toDouble / total
-  }
+  def orphanRate(child: DataFrame, fk: String, parent: DataFrame,
+      pk: String): Double =
+    counts(Seq(TableChecks(child, ref = Some(ForeignKey(fk, parent, pk)))))
+      .head.orphanRate
 
   def evaluate(checkName: String, tableName: String, value: Double,
       threshold: Double, details: String = ""): DqResult =

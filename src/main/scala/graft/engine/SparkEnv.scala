@@ -8,39 +8,36 @@ import org.apache.spark.sql.SparkSession
   * but with scale-aware defaults the reference lacks:
   *
   *  - `spark.sql.shuffle.partitions` sized to the actual parallelism instead of
-  *    Spark's default 200 (wrong for local mode, and on a real cluster the
-  *    caller passes `cores = executors * coresPerExecutor`).
+  *    Spark's default 200: a caller that passes no width gets the context's
+  *    `defaultParallelism` (the task slots of local mode, the executor cores
+  *    of a cluster); a caller that passes one keeps it.
   *  - AQE on: runtime coalescing of small shuffle partitions + skew-join
-  *    splitting, which is what makes a fixed partition count survive a 100x
-  *    scale-up.
+  *    splitting (both Spark defaults once AQE is on), which is what makes a
+  *    fixed partition count survive a 100x scale-up.
   *  - UTC session timezone so date/timestamp semantics match the DuckDB oracle.
   *  - ANSI off in `compatSession`: the reference relies on Spark 3 silent
   *    cast-to-null for dirty strings (`pipeline.py:78-83`); Spark 4 defaults
   *    ANSI on, which would error instead.
+  *  - Bounded SQL thread pools. The shuffle, broadcast and result-stage
+  *    pools have a core size equal to their maximum (1024, 128, 1024), so
+  *    each stage started a new thread that stayed for a minute, and live
+  *    heap grew with every query (~2 MB per medallion run); 32 threads each
+  *    is more than a local session runs at once.
+  *
+  * Both factories share one builder. `getOrCreate` applies its runtime SQL
+  * confs to an already running session too; the static thread-pool confs
+  * take effect only when it starts one.
   */
 object SparkEnv {
 
-  /** Scale-aware session for engine workloads. */
+  /** Scale-aware session for engine workloads. `shufflePartitions` = 0
+    * (the default) derives the width from the context's parallelism.
+    */
   def session(
       appName: String = "graft",
       master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+      shufflePartitions: Int = 0): SparkSession =
+    build(appName, master, shufflePartitions, ansi = true)
 
   /** Reference-compatibility session: identical to [[session]] plus ANSI off,
     * so string->numeric casts over dirty bronze data yield NULL (Spark 3.x
@@ -49,19 +46,33 @@ object SparkEnv {
   def compatSession(
       appName: String = "graft-compat",
       master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession = {
+      shufflePartitions: Int = 0): SparkSession =
+    build(appName, master, shufflePartitions, ansi = false)
+
+  private def build(appName: String, master: String, shufflePartitions: Int,
+      ansi: Boolean): SparkSession = {
+    require(shufflePartitions >= 0,
+      s"shufflePartitions must be >= 0 (0 derives it), got $shufflePartitions")
     val spark = SparkSession
       .builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.ansi.enabled", ansi.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffleExchange.maxThreadThreshold", "32")
+      .config("spark.sql.broadcastExchange.maxThreadThreshold", "32")
+      .config("spark.sql.resultQueryStage.maxThreadThreshold", "32")
       .getOrCreate()
+    // set after getOrCreate: the derived width needs the running context,
+    // and the conf must be positive whenever a session is built with it
+    val width =
+      if (shufflePartitions > 0) shufflePartitions
+      else spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dq.{Checks, DqResult, RunLog}
+import graft.dq.{Checks, DqResult, ForeignKey, RunLog, TableChecks}
 import graft.operators.{Conform, DateDim, DedupLatest, NullPolicy, OrphanPolicy}
 import graft.sources.{CsvSource, SingleFileCsvSink}
 
@@ -33,9 +33,11 @@ import graft.sources.{CsvSource, SingleFileCsvSink}
   *    (left USING join keeps the dangling key), used to reproduce the
   *    committed golden outputs bit-for-bit.
   *
-  * Scale notes: each silver frame is persisted before fan-out (the reference
-  * re-scans bronze CSVs for every one of its ~10 actions); dimension probes
-  * are broadcast; the only unavoidable wide shuffles are the per-PK dedup
+  * Scale notes: each silver frame has exactly one consumer, and the gold
+  * frame built from it is persisted, so silver is computed once per run (the
+  * reference re-scans bronze CSVs for every one of its ~10 actions);
+  * dimension probes are broadcast; all DQ rates and run-log counts come from
+  * one action; the only unavoidable wide shuffles are the per-PK dedup
   * windows, which partition by the dedup key and therefore scale linearly.
   */
 final case class LakehouseConfig(
@@ -54,11 +56,12 @@ final case class LakehouseResult(
     dqResults: DataFrame,
     run: graft.dq.PipelineRun,
     cached: Seq[DataFrame] = Nil) {
-  /** Release every cache this run pinned (silver and gold frames). Call
+  /** Release every cache this run pinned (the gold frames). Call
     * once the result frames have been consumed; the frames stay valid,
-    * later actions just recompute.
+    * later actions just recompute. Blocks until the blocks are gone, so the
+    * removal does not run on into whatever the caller does next.
     */
-  def unpersistAll(): Unit = cached.foreach(_.unpersist())
+  def unpersistAll(): Unit = cached.foreach(_.unpersist(blocking = true))
 }
 
 object LakehousePipeline {
@@ -72,18 +75,16 @@ object LakehousePipeline {
     val partsSalesB = CsvSource.bronze(spark, cfg.partsSalesCsv)
 
     // ---- silver ----
-    val customersS =
-      DedupLatest(customersB, Seq("customer_id"), "created_at").cache()
+    val customersS = DedupLatest(customersB, Seq("customer_id"), "created_at")
     val workOrdersS = NullPolicy(
       DedupLatest(workOrdersB, Seq("work_order_id"), "updated_at"),
-      "order_date", NullPolicy.DropRow).cache()
+      "order_date", NullPolicy.DropRow)
     val partsSalesS = DedupLatest(partsSalesB, Seq("sale_id"), "updated_at")
       .withColumn("quantity", expr("try_cast(quantity AS INT)"))
       .withColumn("unit_price",
         expr("try_cast(coalesce(unit_price, '0') AS DECIMAL(10,2))"))
       .withColumn("total_price",
         (col("quantity") * col("unit_price")).cast("decimal(12,2)"))
-      .cache()
 
     // ---- gold ----
     val dimCustomer = Conform.withUnknownMember(
@@ -108,30 +109,33 @@ object LakehousePipeline {
     val dimDate = DateDim.fromDateColumns(
       Seq((factWorkOrder, "order_date"), (factPartsSales, "sale_date")))
 
-    // ---- data quality ----
-    val (nullRate, _) = Checks.keyRates(dimCustomer, "customer_id")
-    val (_, dupRate) = Checks.keyRates(factWorkOrder, "work_order_id")
-    val orphanRate =
-      Checks.orphanRate(factPartsSales, "work_order_id", factWorkOrder,
-        "work_order_id")
-    // the check the reference documents but never implements (SURVEY §2.9):
-    val woOrphanRate =
-      Checks.orphanRate(factWorkOrder, "customer_id", dimCustomer,
-        "customer_id")
+    // ---- data quality + run log: every rate and row count in ONE action ----
+    val Seq(dimCustomerDq, factWorkOrderDq, factPartsSalesDq) =
+      Checks.counts(Seq(
+        TableChecks(dimCustomer, key = Some("customer_id")),
+        // the orphan check the reference documents but never implements
+        // (SURVEY §2.9):
+        TableChecks(factWorkOrder, key = Some("work_order_id"),
+          ref = Some(ForeignKey("customer_id", dimCustomer, "customer_id"))),
+        TableChecks(factPartsSales,
+          ref = Some(ForeignKey("work_order_id", factWorkOrder,
+            "work_order_id")))))
     val dqRows: Seq[DqResult] = Seq(
-      Checks.evaluate("null_rate_customer_id", "dim_customer", nullRate, 0.01,
-        "customer_id should not be null"),
-      Checks.evaluate("duplicate_rate_work_order", "fact_work_order", dupRate,
-        0.0, "work_order_id must be unique"),
+      Checks.evaluate("null_rate_customer_id", "dim_customer",
+        dimCustomerDq.nullRate, 0.01, "customer_id should not be null"),
+      Checks.evaluate("duplicate_rate_work_order", "fact_work_order",
+        factWorkOrderDq.dupRate, 0.0, "work_order_id must be unique"),
       Checks.evaluate("orphan_rate_parts_sales", "fact_parts_sales",
-        orphanRate, 0.0, "sales must reference valid work_order"),
+        factPartsSalesDq.orphanRate, 0.0,
+        "sales must reference valid work_order"),
       Checks.evaluate("orphan_rate_work_order", "fact_work_order",
-        woOrphanRate, 0.0, "work orders must reference valid customer"))
+        factWorkOrderDq.orphanRate, 0.0,
+        "work orders must reference valid customer"))
     val dqDf = Checks.ledger(spark, dqRows)
 
     // ---- run log + publish ----
-    val run = RunLog.finish(runId, startedAt, dimCustomer.count(),
-      factWorkOrder.count(), factPartsSales.count())
+    val run = RunLog.finish(runId, startedAt, dimCustomerDq.n,
+      factWorkOrderDq.n, factPartsSalesDq.n)
 
     if (cfg.writeOutputs) {
       val out = cfg.outputDir
@@ -145,7 +149,6 @@ object LakehousePipeline {
 
     LakehouseResult(dimCustomer, factWorkOrder, factPartsSales, dimDate, dqDf,
       run,
-      cached = Seq(customersS, workOrdersS, partsSalesS, dimCustomer,
-        factWorkOrder, factPartsSales))
+      cached = Seq(dimCustomer, factWorkOrder, factPartsSales))
   }
 }

@@ -1,7 +1,13 @@
 package graft.sources
 
+import scala.util.Try
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Table sources.
   *
@@ -14,9 +20,36 @@ import org.apache.spark.sql.types.StructType
   */
 object CsvSource {
 
-  /** Bronze-mode scan: header CSV, all columns StringType (reference parity). */
-  def bronze(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+  /** Bronze-mode scan: header CSV, all columns StringType (reference parity).
+    * The header of a single file is read and named on the driver the way
+    * Spark's CSV inference names it (same parser settings, same sanitising of
+    * empty and duplicate names), so the scan gets an explicit schema instead
+    * of a Spark job over the file per call. Any other path (a directory, a
+    * glob, a file without a header line) is left to Spark's inference.
+    */
+  def bronze(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    headerSchema(spark, path).fold(reader.csv(path))(reader.schema(_).csv(path))
+  }
+
+  private def headerSchema(spark: SparkSession, path: String)
+      : Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val sql = spark.sessionState.conf
+    val file = new Path(path)
+    val status = Try(file.getFileSystem(conf).getFileStatus(file)).toOption
+    if (!status.exists(_.isFile)) None
+    else {
+      val options = new CSVOptions(Map("header" -> "true"),
+        sql.csvColumnPruning, sql.sessionLocalTimeZone)
+      // the text scan Spark infers from drops a UTF-8 byte-order mark
+      CSVUtils.readHeaderLine(file, options, conf)
+        .flatMap(line => Option(new CsvParser(options.asParserSettings)
+          .parseLine(line.stripPrefix("\uFEFF"))))
+        .map(row => StructType(CSVUtils.makeSafeHeader(row,
+          sql.caseSensitiveAnalysis, options).map(StructField(_, StringType))))
+    }
+  }
 
   /** Schema-checked scan: explicit StructType, no inference pass over the data
     * (inferSchema is a full extra read — never acceptable at scale).

@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -41,5 +44,28 @@ class SourcesSpec extends SparkSpec {
       plan.contains("LessThanOrEqual(p_size,10)"), plan.take(1500))
     assert(filtered.count() ==
       orig.filter(col("p_size") <= 10).count())
+  }
+
+  test("bronze CSV names columns as Spark's header inference does") {
+    val dir = Paths.get("target/src_bronze")
+    Files.createDirectories(dir.resolve("one"))
+    val files = Seq(
+      "plain.csv" -> "id,name,amount\n1,a,2.5\n2,,3\n",
+      // blank lines first, a quoted name with a comma, a duplicate, an
+      // empty name, a case-insensitive duplicate
+      "awkward.csv" -> "\n \nid,\"last, first\",id,,Id\n1,x,2,3,4\n",
+      "bom.csv" -> "\uFEFFid,name\n1,a\n",
+      "header_only.csv" -> "a,b\n",
+      "one/part.csv" -> "k,v\n1,2\n")
+    for ((name, body) <- files)
+      Files.write(dir.resolve(name), body.getBytes(UTF_8))
+    // a directory is left to Spark's inference
+    for (name <- files.map(_._1) :+ "one") {
+      val path = dir.resolve(name).toString
+      val inferred = spark.read.option("header", "true").csv(path)
+      val bronze = CsvSource.bronze(spark, path)
+      assert(bronze.schema == inferred.schema, name)
+      assert(bronze.collect().toSeq == inferred.collect().toSeq, name)
+    }
   }
 }
