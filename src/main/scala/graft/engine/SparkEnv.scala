@@ -23,10 +23,27 @@ import org.apache.spark.sql.SparkSession
   *    each stage started a new thread that stayed for a minute, and live
   *    heap grew with every query (~2 MB per medallion run); 32 threads each
   *    is more than a local session runs at once.
+  *  - Hadoop's `file:` scheme served by [[NioLocalFileSystem]] and
+  *    [[NioLocalFs]]. Not set here: the `core-site.xml` among graft's
+  *    resources names them for every Hadoop `Configuration` in the JVM, so
+  *    sessions built without this factory get them too. Without Hadoop's
+  *    native library the stock classes fork `chmod` for each file they
+  *    create and `readlink` for each `FileContext` rename: ~400 process
+  *    starts per stream micro-batch, in offset, commit and state-store
+  *    files, and ~59 per medallion run in the CSV publish. The files on
+  *    disk are the same.
+  *  - A codegen cache of 256 classes (`spark.sql.codegen.cache.maxEntries`,
+  *    default 100). A medallion pass generates ~170 classes, so at 100 every
+  *    pass evicted and recompiled nearly all of them through Janino.
+  *  - A status-store history of 50 jobs, stages and SQL executions
+  *    (`spark.ui.retainedJobs`, `spark.ui.retainedStages`,
+  *    `spark.sql.ui.retainedExecutions`; defaults 1000). Nothing in graft
+  *    reads that store, and with the defaults live heap grew ~2 MB with
+  *    every medallion pass.
   *
   * Both factories share one builder. `getOrCreate` applies its runtime SQL
-  * confs to an already running session too; the static thread-pool confs
-  * take effect only when it starts one.
+  * confs to an already running session too; the static confs (thread pools,
+  * codegen cache, status store) take effect only when it starts one.
   */
 object SparkEnv {
 
@@ -66,6 +83,10 @@ object SparkEnv {
       .config("spark.sql.shuffleExchange.maxThreadThreshold", "32")
       .config("spark.sql.broadcastExchange.maxThreadThreshold", "32")
       .config("spark.sql.resultQueryStage.maxThreadThreshold", "32")
+      .config("spark.sql.codegen.cache.maxEntries", "256")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.sql.ui.retainedExecutions", "50")
       .getOrCreate()
     // set after getOrCreate: the derived width needs the running context,
     // and the conf must be positive whenever a session is built with it
